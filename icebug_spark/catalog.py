@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint
 from icebug_spark.session import prepare
 
 TABLES = [
@@ -113,7 +114,7 @@ def derived_weighted_edges(
         .agg(F.count(F.lit(1)).cast("double").alias("weight"))
     )
     if materialize:
-        ew = ew.localCheckpoint(eager=True)
+        ew = checkpoint(ew)
         _DERIVED_CACHE[key] = ew
     return ew
 
@@ -162,7 +163,7 @@ def derived_edges_undirected(
         .union(c.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         .union(e.where(F.col("src") == F.col("dst")))
     )
-    eu = eu.localCheckpoint(eager=True)
+    eu = checkpoint(eu)
     _EU_CACHE[key] = eu
     return eu
 
@@ -189,7 +190,7 @@ def derived_canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cached is not None:
         return cached
     c = canonical_edges(derived_edges(spark, sf_dir, materialize=True))
-    c = c.localCheckpoint(eager=True)
+    c = checkpoint(c)
     _DERIVED_CACHE[key] = c
     return c
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.plans.iterate import checkpoint_observe
+
 S, E, I, R = 0, 1, 2, 3
 
 
@@ -33,8 +35,6 @@ def seir_simulation(
     infectious neighbors becomes exposed iff min over contacts of
     hash-u01(src, dst, step, seed) < trans_p (per-contact independent
     coins, deterministic)."""
-    from icebug_spark.plans.iterate import checkpoint_observe
-
     spark = eu.sparkSession
     nodes = (
         eu.select(F.col("src").alias("id"))

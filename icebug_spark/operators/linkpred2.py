@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators.linkpred import _neighbor_pairs, common_neighbors
+from icebug_spark.plans.iterate import checkpoint, mirror
 
 
 def _deg(adj: DataFrame) -> DataFrame:
@@ -191,11 +192,10 @@ def katz_index_from(
     )
     total = None
     for l in range(1, max_path_length + 1):
-        frontier = (
+        frontier = checkpoint(
             frontier.join(adj, "node")
             .groupBy("src", F.col("nbr").alias("node"))
             .agg(F.sum("paths").alias("paths"))
-            .localCheckpoint(eager=True)
         )
         contrib = frontier.select("src", "node", F.lit(l).alias("l"), "paths")
         total = contrib if total is None else total.union(contrib)
@@ -383,7 +383,6 @@ def algebraic_distance_index(
     :func:`distances.algebraic_loads`). NaN → 0 like ``runImpl``.
     → (u, v, alg_score) 6dp."""
     from icebug_spark.operators.distances import algebraic_loads
-    from icebug_spark.plans.iterate import mirror
 
     x, n = algebraic_loads(edges_undirected, n_systems, rounds, omega, seed)
     j = (

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators import algebraic
-from icebug_spark.plans.iterate import checkpoint_observe
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe
 
 
 def _expand_level(
@@ -65,7 +65,7 @@ def bidirectional_bfs(
         return spark.createDataFrame(
             [(source, target, 0)], "source BIGINT, target BIGINT, dist BIGINT"
         )
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    e = checkpoint(edges.select("src", "dst"))
     er = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
     ds = spark.createDataFrame([(int(source), 0)], "id BIGINT, dist BIGINT")
@@ -96,7 +96,7 @@ def bidirectional_bfs(
             if int(mf["n"] or 0) == 0:
                 s_alive = False
             else:
-                ds = ds.union(fs).localCheckpoint(eager=True)
+                ds = checkpoint(ds.union(fs))
                 ls += 1
         else:
             ft, mf = checkpoint_observe(
@@ -105,7 +105,7 @@ def bidirectional_bfs(
             if int(mf["n"] or 0) == 0:
                 t_alive = False
             else:
-                dt = dt.union(ft).localCheckpoint(eager=True)
+                dt = checkpoint(dt.union(ft))
                 lt += 1
     return spark.createDataFrame([], "source BIGINT, target BIGINT, dist BIGINT")
 
@@ -173,7 +173,7 @@ def bidirectional_dijkstra(
         return spark.createDataFrame(
             [(source, target, 0.0)], "source BIGINT, target BIGINT, dist DOUBLE"
         )
-    e = edges_weighted.select("src", "dst", "weight").localCheckpoint(eager=True)
+    e = checkpoint(edges_weighted.select("src", "dst", "weight"))
     er = e.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
     )
@@ -238,11 +238,11 @@ def astar(
         return spark.createDataFrame(
             [(source, target, 0.0)], "source BIGINT, target BIGINT, dist DOUBLE"
         )
-    e = edges_weighted.select("src", "dst", "weight").localCheckpoint(eager=True)
+    e = checkpoint(edges_weighted.select("src", "dst", "weight"))
     if heuristic is not None:
-        h = heuristic.select(
+        h = checkpoint(heuristic.select(
             "id", F.col("h").cast("double").alias("h")
-        ).localCheckpoint(eager=True)
+        ))
     dist = spark.createDataFrame(
         [(int(source), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
     )
@@ -263,7 +263,7 @@ def astar(
             .agg(F.min("nd").alias("nd"))
         )
         joined = dist.select("id", "dist").join(relax, "id", "full")
-        dist = joined.select(
+        dist = checkpoint(joined.select(
             "id",
             F.least(
                 F.coalesce(F.col("dist"), F.lit(float("inf"))),
@@ -273,7 +273,7 @@ def astar(
                 F.col("dist").isNull()
                 | (F.coalesce(F.col("nd"), F.lit(float("inf"))) < F.col("dist"))
             ).alias("changed"),
-        ).localCheckpoint(eager=True)
+        ))
         row = dist.agg(
             F.sum(F.col("changed").cast("int")).alias("n"),
             F.min(F.when(F.col("id") == target, F.col("dist"))).alias("tdist"),
@@ -299,7 +299,7 @@ def multi_target_bfs(
     whole target set is levelled. Returns (id, dist) for reached targets.
     """
     spark = edges.sparkSession
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    e = checkpoint(edges.select("src", "dst"))
     tset = {int(t) for t in targets}
     t_df = spark.createDataFrame([(t,) for t in tset], "id BIGINT")
     seen = spark.createDataFrame([(int(source), 0)], "id BIGINT, dist BIGINT")
@@ -337,7 +337,7 @@ def multi_target_dijkstra(
     label ≥ the costliest target label (positive weights ⇒ no active
     node can still improve a target). Returns (id, dist DOUBLE)."""
     spark = edges_weighted.sparkSession
-    e = edges_weighted.select("src", "dst", "weight").localCheckpoint(eager=True)
+    e = checkpoint(edges_weighted.select("src", "dst", "weight"))
     tset = {int(t) for t in targets}
     t_df = spark.createDataFrame([(t,) for t in tset], "id BIGINT")
     dist = spark.createDataFrame(
@@ -382,11 +382,10 @@ def floyd_warshall(
     import math
 
     e = edges_weighted.select("src", "dst", "weight")
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n > max_nodes:
@@ -396,18 +395,17 @@ def floyd_warshall(
         )
     if max_squarings is None:
         max_squarings = max(1, math.ceil(math.log2(max(2, n)))) + 1
-    d = (
+    d = checkpoint(
         e.groupBy(F.col("src").alias("row"), F.col("dst").alias("col"))
         .agg(F.min("weight").alias("value"))
         .union(nodes.select(F.col("id").alias("row"), F.col("id").alias("col"),
                             F.lit(0.0).alias("value")))
         .groupBy("row", "col").agg(F.min("value").alias("value"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_squarings):
-        d2 = algebraic.e_wise_add(
+        d2 = checkpoint(algebraic.e_wise_add(
             algebraic.mxm(d, d, algebraic.MIN_PLUS), d, algebraic.MIN_PLUS
-        ).localCheckpoint(eager=True)
+        ))
         improved = (
             d2.join(
                 d.select("row", "col", F.col("value").alias("old")),

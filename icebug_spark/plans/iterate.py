@@ -5,7 +5,12 @@ components, BFS frontier, k-core peeling, Borůvka, Luby, suitor matching…)
 are OpenMP loops over in-memory arrays. In Spark each round is a join +
 aggregation; unbounded lineage growth and plan-explosion are the scale
 hazards, so the runner truncates lineage with a checkpoint every few
-rounds. Two checkpoint modes:
+rounds.
+
+Every lineage truncation in the package goes through ``checkpoint`` —
+directly, or via ``checkpoint_observe``, ``pin`` and ``pin_observe``,
+which are built on it — so loops, streaming maintainers and generators
+all share one truncation policy with two modes:
 
 - ``localCheckpoint`` (default): cheap, executor-local, right for the
   local test path. No fault tolerance — an executor loss kills the job.
@@ -19,7 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: default row bound under which node-keyed loop state is broadcast.
@@ -63,13 +68,38 @@ def mirror(state: DataFrame, rows_bound: int) -> DataFrame:
     return F.broadcast(state)
 
 
+#: test/debug hook: when set to a list, ``checkpoint`` appends each
+#: DataFrame's physical-plan string before truncating it. This exposes
+#: the PER-ROUND loop plans (join strategy, Exchange count, bucketed
+#: scans) that eager checkpointing would otherwise discard — the plan
+#: proof that a bucketed edge table elides its Exchange inside a real
+#: algorithm loop lives on this hook (tests/test_bucketing.py).
+PLAN_CAPTURE: list[str] | None = None
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager lineage truncation honouring the reliable-checkpoint flag —
+    the package's only call into ``DataFrame.(local)checkpoint``."""
+    if PLAN_CAPTURE is not None:
+        PLAN_CAPTURE.append(
+            df._jdf.queryExecution().executedPlan().toString()
+        )
+    reliable = (
+        df.sparkSession.conf.get("spark.icebug.reliableCheckpoint", "false").lower()
+        == "true"
+    )
+    if reliable:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def pin(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint with the inherited plan statistics RESET to
+    """Eager ``checkpoint`` with the inherited plan statistics RESET to
     fresh leaf stats — the stage-boundary truncation for SOLVER loops
     whose stages join a vector against itself (directly or through an
     MxV that references it twice).
 
-    Why not plain ``localCheckpoint``: Spark copies the source plan's
+    Why not plain ``checkpoint``: Spark copies the source plan's
     computed statistics onto the checkpointed ``LogicalRDD``, and a
     join's ``sizeInBytes`` is the BigInt PRODUCT of its children's — its
     digit count the SUM of theirs. A loop that pins, references the pin
@@ -84,7 +114,7 @@ def pin(df: DataFrame) -> DataFrame:
     vector joins do); plain loop states that rely on inherited stats for
     auto-broadcast should keep using ``checkpoint``."""
     spark = df.sparkSession
-    jdf = df._jdf.localCheckpoint(True)
+    jdf = checkpoint(df)._jdf
     try:
         # fresh LogicalRDD over the SAME materialized InternalRow
         # partitions — zero conversion (private[sql] is public at the
@@ -97,31 +127,6 @@ def pin(df: DataFrame) -> DataFrame:
         # InternalRow<->Row conversion per partition, still distributed)
         jnew = spark._jsparkSession.createDataFrame(jdf.toJavaRDD(), jdf.schema())
     return DataFrame(jnew, spark)
-
-
-#: test/debug hook: when set to a list, ``checkpoint`` appends each
-#: DataFrame's physical-plan string before truncating it. This exposes
-#: the PER-ROUND loop plans (join strategy, Exchange count, bucketed
-#: scans) that eager checkpointing would otherwise discard — the plan
-#: proof that a bucketed edge table elides its Exchange inside a real
-#: algorithm loop lives on this hook (tests/test_bucketing.py).
-PLAN_CAPTURE: list[str] | None = None
-
-
-def checkpoint(df: DataFrame) -> DataFrame:
-    """Eager lineage truncation honouring the reliable-checkpoint flag."""
-    if PLAN_CAPTURE is not None:
-        PLAN_CAPTURE.append(
-            df._jdf.queryExecution().executedPlan().toString()
-        )
-    spark = df.sparkSession
-    reliable = (
-        spark.conf.get("spark.icebug.reliableCheckpoint", "false").lower()
-        == "true"
-    )
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def checkpoint_observe(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
@@ -154,34 +159,16 @@ def checkpoint_observe(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
     aggregation (see ``spectrum.laplacian_eigenvectors_power`` and the
     pagerank ``eplus`` diagonal-carry for the pattern), or ``pin`` to
     reset the stats."""
-    from pyspark.sql import Observation
-
-    if PLAN_CAPTURE is not None:
-        PLAN_CAPTURE.append(
-            df._jdf.queryExecution().executedPlan().toString()
-        )
-    spark = df.sparkSession
     obs = Observation()
-    observed = df.observe(obs, *aggs)
-    reliable = (
-        spark.conf.get("spark.icebug.reliableCheckpoint", "false").lower()
-        == "true"
-    )
-    if reliable:
-        cp = observed.checkpoint(eager=True)
-    else:
-        cp = observed.localCheckpoint(eager=True)
-    return cp, obs.get
+    return checkpoint(df.observe(obs, *aggs)), obs.get
 
 
 def pin_observe(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
-    """``pin`` (stats-resetting eager localCheckpoint) with aggregates
+    """``pin`` (stats-resetting eager ``checkpoint``) with aggregates
     observed during the pinning action — the solver-loop variant of
     ``checkpoint_observe``: one Spark job yields both the materialized
     stage state and every scalar the driver needs to build the next
     stage's plan (α/β literals, stopping residuals)."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     return pin(df.observe(obs, *aggs)), obs.get
 

@@ -111,14 +111,6 @@ def zigzag_decode(value: int) -> int:
     return (value >> 1) ^ -(value & 1)
 
 
-def _varint_size(value: int) -> int:
-    if value == 0:
-        return 1
-    if value >= 1 << 56:
-        return 9
-    return (value.bit_length() - 1) // 7 + 1
-
-
 # ---------------------------------------------------------------------------
 # writer (NetworkitBinaryWriter.cpp:40)
 # ---------------------------------------------------------------------------

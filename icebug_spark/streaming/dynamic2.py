@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icebug_spark.plans.iterate import checkpoint_observe
+from icebug_spark.plans.iterate import checkpoint, checkpoint_observe
 
 
 def _sym(e: DataFrame) -> DataFrame:
@@ -56,7 +56,7 @@ def affected_nodes(
     """AffectedNodes (``distance/AffectedNodes.hpp:17``): the k-hop
     neighborhood (in the UPDATED graph) of every event endpoint — the node
     set whose results may have changed. → (id)."""
-    eu = _sym(edges_new).localCheckpoint(eager=True)
+    eu = checkpoint(_sym(edges_new))
     frontier = (
         batch.select(F.col("u").alias("id"))
         .union(batch.select(F.col("v").alias("id")))
@@ -75,7 +75,7 @@ def affected_nodes(
         )
         if int(m["n"] or 0) == 0:
             break
-        seen = seen.union(frontier).localCheckpoint(eager=True)
+        seen = checkpoint(seen.union(frontier))
     return seen
 
 
@@ -90,7 +90,7 @@ def dyn_bfs_update(
     lengthen paths — detected by seeding affected nodes with +inf and
     re-relaxing from their still-settled neighbors (bounded recompute; the
     reference tracks the same 'affected' set per event)."""
-    eu = _sym(edges_new).localCheckpoint(eager=True)
+    eu = checkpoint(_sym(edges_new))
     has_removal = batch.where(F.col("type") == "EDGE_REMOVAL").limit(1).count() > 0
 
     if has_removal:
@@ -102,7 +102,7 @@ def dyn_bfs_update(
             dist.where(F.col("dist") == 0)
         ).distinct()
 
-    cur = dist.localCheckpoint(eager=True)
+    cur = checkpoint(dist)
     for _ in range(max_rounds):
         relaxed = (
             eu.join(cur.withColumnRenamed("id", "src").withColumnRenamed("dist", "ds"), "src")
@@ -140,7 +140,7 @@ def dyn_cc_update(
     (restricted recompute: only edges inside those components join the
     loop), everything else is untouched."""
     dels = batch.where(F.col("type") == "EDGE_REMOVAL")
-    eu = _sym(edges_new).localCheckpoint(eager=True)
+    eu = checkpoint(_sym(edges_new))
 
     # normalize label coverage to the UPDATED graph's node set: an added
     # edge may introduce endpoints the old labeling never saw (they seed
@@ -167,17 +167,16 @@ def dyn_cc_update(
         frozen = comp.join(touched, "component", "left_anti")
         active_nodes = comp.join(touched, "component").select("id")
         labels = active_nodes.withColumn("component", F.col("id"))
-        active_edges = (
+        active_edges = checkpoint(
             eu.join(active_nodes.withColumnRenamed("id", "src"), "src")
             .join(active_nodes.withColumnRenamed("id", "dst"), "dst")
-            .localCheckpoint(eager=True)
         )
     else:
         frozen = None
         labels = comp
         active_edges = eu
 
-    cur = labels.localCheckpoint(eager=True)
+    cur = checkpoint(labels)
     for _ in range(max_rounds):
         prop = (
             active_edges.join(cur.withColumnRenamed("id", "src").withColumnRenamed("component", "c"), "src")
@@ -240,20 +239,18 @@ def dyn_katz_update(
     each term one join+groupBy, lineage checkpointed. The 'incremental'
     win in Spark comes from reusing the cached symmetrized edge table, not
     per-entry deltas. → (id, katz) 6dp."""
-    eu = _sym(edges_new).localCheckpoint(eager=True)
-    x = (
+    eu = checkpoint(_sym(edges_new))
+    x = checkpoint(
         eu.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("term", F.lit(1.0))
-        .localCheckpoint(eager=True)
     )
     terms = [x]
     for _ in range(iters):
-        x = (
+        x = checkpoint(
             eu.join(x.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg((F.lit(alpha) * F.sum("term")).alias("term"))
-            .localCheckpoint(eager=True)
         )
         terms.append(x)
     # one final aggregation over the (checkpointed) per-iteration term

@@ -3,7 +3,9 @@
 reliable `checkpoint()` path must produce identical results to the
 defaults — they are plan-shape choices, not semantics."""
 
-import tempfile
+import ast
+import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,15 +136,94 @@ def test_pin_public_api_fallback(eu, spark):
         spark._jsparkSession = real
 
 
-def test_reliable_checkpoint(eu, spark):
-    """`spark.icebug.reliableCheckpoint=true` routes lineage truncation
-    through `DataFrame.checkpoint` into the configured checkpoint dir —
-    the cluster fault-tolerance mode (SURVEY §7)."""
-    with tempfile.TemporaryDirectory() as d:
-        spark.sparkContext.setCheckpointDir(d)
-        spark.conf.set("spark.icebug.reliableCheckpoint", "true")
-        try:
-            assert _cc(eu) == EXPECT_CC
-            assert _bfs_dists(eu) == EXPECT_BFS
-        finally:
-            spark.conf.unset("spark.icebug.reliableCheckpoint")
+PACKAGE = Path(__file__).resolve().parent.parent / "icebug_spark"
+
+
+def test_truncation_only_in_iterate():
+    """Every lineage truncation goes through ``plans.iterate`` — a raw
+    ``.localCheckpoint(`` / ``.checkpoint(`` call anywhere else would
+    silently ignore ``spark.icebug.reliableCheckpoint`` and the
+    ``PLAN_CAPTURE`` hook."""
+    raw = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        if rel == "plans/iterate.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                raw.append(f"{rel}:{node.lineno}")
+    assert raw == [], f"raw truncation outside plans/iterate.py: {raw}"
+
+
+def _file_count(d) -> int:
+    return sum(len(files) for _, _, files in os.walk(d))
+
+
+def test_reliable_mode_reaches_every_loop_family(eu, spark, tmp_path):
+    """With ``spark.icebug.reliableCheckpoint=true`` (the cluster
+    fault-tolerance mode, SURVEY §7) one loop of each family — BFS,
+    connected components, incremental label propagation, a ``pin``
+    solver and a streaming batch — writes its state into the checkpoint
+    dir, and returns what local mode returns. ``pin`` and
+    ``checkpoint_observe`` also run on their own: each loop truncates
+    through ``checkpoint`` as well, which would hide a helper that
+    bypassed it."""
+    from icebug_spark.operators.components import connected_components
+    from icebug_spark.operators.numerics import commute_time_distances
+    from icebug_spark.plans.iterate import checkpoint_observe, pin
+    from icebug_spark.streaming.dynamic2 import apply_edge_events, dyn_cc_update
+    from icebug_spark.streaming.updater import EVENT_SCHEMA, GraphUpdater
+
+    removal = spark.createDataFrame(
+        [("EDGE_REMOVAL", 1, 2), ("EDGE_REMOVAL", 2, 1)], "type STRING, u LONG, v LONG"
+    )
+    comp0 = connected_components(eu)
+    eu_cut = apply_edge_events(eu, removal)
+    events = spark.createDataFrame(
+        [(0, "EDGE_ADDITION", 3, 4, 1.0), (1, "EDGE_REMOVAL", 0, 1, None)],
+        EVENT_SCHEMA,
+    )
+    # one fresh updater per mode, built before either mode runs
+    updaters = [
+        GraphUpdater(eu.withColumn("weight", F.lit(1.0))) for _ in range(2)
+    ]
+
+    def one_batch():
+        upd = updaters.pop()
+        upd.process(events, 0)
+        return sorted(map(tuple, upd.edges.collect()))
+
+    families = {
+        "bfs": lambda: _bfs_dists(eu),
+        "connected_components": lambda: _cc(eu),
+        "label_propagation": lambda: {
+            r["id"]: r["component"]
+            for r in dyn_cc_update(comp0, eu_cut, removal).collect()
+        },
+        "pin_solver": lambda: commute_time_distances(
+            eu.withColumn("weight", F.lit(1.0)), [(0, 3)]
+        ).collect(),
+        "streaming_batch": one_batch,
+        "pin": lambda: sorted(map(tuple, pin(eu).collect())),
+        "checkpoint_observe": lambda: checkpoint_observe(
+            eu, F.count(F.lit(1)).alias("n")
+        )[1],
+    }
+    local = {name: run() for name, run in families.items()}
+    assert local["bfs"] == EXPECT_BFS and local["connected_components"] == EXPECT_CC
+    assert local["label_propagation"][0] != local["label_propagation"][3]
+    assert abs(local["pin_solver"][0]["commute_time"] - 24.0) < 1e-3
+
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    spark.conf.set("spark.icebug.reliableCheckpoint", "true")
+    try:
+        for name, run in families.items():
+            before = _file_count(tmp_path)
+            assert run() == local[name], name
+            assert _file_count(tmp_path) > before, name
+    finally:
+        spark.conf.unset("spark.icebug.reliableCheckpoint")
