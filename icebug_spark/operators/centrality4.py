@@ -185,7 +185,7 @@ def _sampled_path_members(
     one pair-keyed multi-source BFS forward (dist, σ), then a σ-weighted
     backward walk one level per round."""
     # forward multi-source BFS with path counts sigma, keyed by pair —
-    # the fused level shape (see traversal.multi_source_bfs): the state
+    # the fused level shape (see traversal.bfs_levels): the state
     # rides the expansion's exchange as carrier rows, a node is NEW
     # exactly when its group has no carrier, and σ(new node) is the sum
     # of this level's message σ's (σ of seen nodes is carried through
@@ -313,6 +313,25 @@ def _sampled_path_members(
     return allv
 
 
+def _kadabra_err(bet, n_pairs, omega, log_inv_d, least, sqrt):
+    """KADABRA's per-node (err_l, err_u) error bounds for a betweenness
+    estimate ``bet`` (KadabraBetweenness.cpp:45-104) — a Column with
+    ``F.least``/``F.sqrt``, or a driver float with ``min``/``math.sqrt``;
+    both evaluate the same IEEE double operations in the same order."""
+    tmp_l = omega / n_pairs - 1.0 / 3
+    tmp_u = omega / n_pairs + 1.0 / 3
+    scale = log_inv_d / n_pairs
+    err_l = least(
+        scale * (-tmp_l + sqrt(tmp_l * tmp_l + 2 * bet * omega / log_inv_d)),
+        bet,
+    )
+    err_u = least(
+        scale * (tmp_u + sqrt(tmp_u * tmp_u + 2 * bet * omega / log_inv_d)),
+        1 - bet,
+    )
+    return err_l, err_u
+
+
 def kadabra_betweenness(
     edges_undirected: DataFrame,
     err: float = 0.05,
@@ -338,8 +357,6 @@ def kadabra_betweenness(
     (all pairs advance together); the stopping rule is a scalar aggregate
     per round — the adaptive loop is driver-coordinated, the data work is
     fully distributed. → (id, kadabra_bc, err_lower, err_upper)."""
-    import math as _math
-
     spark = edges_undirected.sparkSession
     eu = edges_undirected.select("src", "dst")
     eu = checkpoint(eu.union(
@@ -350,10 +367,10 @@ def kadabra_betweenness(
     vd = diameter_double_sweep(edges_undirected).collect()[0][0] or 2
     vd = max(int(vd), 2)
 
-    omega = 0.5 / err / err * (_math.log2(max(vd - 1, 2)) + 1 + _math.log(0.5 / delta))
+    omega = 0.5 / err / err * (math.log2(max(vd - 1, 2)) + 1 + math.log(0.5 / delta))
     batch = max(32, int(omega / start_factor))
     delta_node = delta / (2.0 * n)
-    log_inv_d = _math.log(1.0 / delta_node)
+    log_inv_d = math.log(1.0 / delta_node)
 
     counts = None
     n_pairs = 0
@@ -394,23 +411,13 @@ def kadabra_betweenness(
         # over the VISITED nodes rides the counts checkpoint as an
         # observed metric; the never-visited nodes (cnt absent from the
         # counts table) all share ONE bound value — bet = 0.0 — computed
-        # driver-side with the same IEEE double operations in the same
-        # order as the old Spark expression (so the stopping decision's
-        # float path is unchanged; pinned-trajectory test in
+        # driver-side by the same helper (so the stopping decision's
+        # float path matches the in-plan one; pinned-trajectory test in
         # tests/test_centrality2.py). This removes the per-round
         # nodes⟗counts scalar job.
-        bet = F.col("cnt").cast("double") / n_pairs
-        tmp_l = F.lit(omega / n_pairs - 1.0 / 3)
-        tmp_u = F.lit(omega / n_pairs + 1.0 / 3)
-        err_l = F.least(
-            F.lit(log_inv_d / n_pairs)
-            * (-tmp_l + F.sqrt(tmp_l * tmp_l + 2 * bet * omega / log_inv_d)),
-            bet,
-        )
-        err_u = F.least(
-            F.lit(log_inv_d / n_pairs)
-            * (tmp_u + F.sqrt(tmp_u * tmp_u + 2 * bet * omega / log_inv_d)),
-            1 - bet,
+        err_l, err_u = _kadabra_err(
+            F.col("cnt").cast("double") / n_pairs,
+            n_pairs, omega, log_inv_d, F.least, F.sqrt,
         )
         counts, met = checkpoint_observe(
             new
@@ -423,21 +430,10 @@ def kadabra_betweenness(
         )
         worst = met["w"]
         if int(met["nr"] or 0) < n:
-            # zero-count node bound, bet = 0.0 (same ops/order as the old
-            # in-plan expression evaluated at cnt IS NULL)
-            tl = omega / n_pairs - 1.0 / 3
-            tu = omega / n_pairs + 1.0 / 3
-            zl = min(
-                log_inv_d / n_pairs
-                * (-tl + _math.sqrt(tl * tl + 2 * 0.0 * omega / log_inv_d)),
-                0.0,
+            # zero-count node bound, bet = 0.0
+            zbound = max(
+                _kadabra_err(0.0, n_pairs, omega, log_inv_d, min, math.sqrt)
             )
-            zu = min(
-                log_inv_d / n_pairs
-                * (tu + _math.sqrt(tu * tu + 2 * 0.0 * omega / log_inv_d)),
-                1 - 0.0,
-            )
-            zbound = max(zl, zu)
             worst = zbound if worst is None else max(float(worst), zbound)
         if worst is not None and worst < err:
             break
@@ -445,17 +441,8 @@ def kadabra_betweenness(
             break
 
     bet = F.coalesce(F.col("cnt"), F.lit(0)).cast("double") / n_pairs
-    tmp_l = F.lit(omega / n_pairs - 1.0 / 3)
-    tmp_u = F.lit(omega / n_pairs + 1.0 / 3)
-    err_l = F.least(
-        F.lit(log_inv_d / n_pairs)
-        * (-tmp_l + F.sqrt(tmp_l * tmp_l + 2 * bet * omega / log_inv_d)),
-        bet,
-    )
-    err_u = F.least(
-        F.lit(log_inv_d / n_pairs)
-        * (tmp_u + F.sqrt(tmp_u * tmp_u + 2 * bet * omega / log_inv_d)),
-        1 - bet,
+    err_l, err_u = _kadabra_err(
+        bet, n_pairs, omega, log_inv_d, F.least, F.sqrt
     )
     return nodes.join(counts, "id", "left").select(
         "id",

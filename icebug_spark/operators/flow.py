@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.operators.traversal import multi_source_bfs
 from icebug_spark.plans.iterate import checkpoint
 
 
@@ -169,18 +170,5 @@ def edmonds_karp(
     )
     # source set: nodes reachable from source in final residual graph
     arcs = checkpoint(residual.where(F.col("cap") > 1e-12).select("src", "dst"))
-    frontier = spark.createDataFrame([(source,)], "id BIGINT")
-    reach = frontier
-    for _ in range(64):
-        frontier = checkpoint(
-            frontier.join(arcs, frontier.id == arcs.src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(reach, "id", "left_anti")
-        )
-        # frontiers are disjoint and individually checkpointed: plain
-        # union keeps lineage flat with zero extra jobs per hop.
-        if frontier.isEmpty():
-            break
-        reach = reach.union(frontier)
+    reach = multi_source_bfs(arcs, [source], 64).select("id")
     return {"max_flow": max_flow, "flow": flow, "source_set": reach}

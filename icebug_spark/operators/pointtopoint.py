@@ -14,7 +14,11 @@ Parity targets (reference ``distance/``):
 - ReverseBFS.hpp:16 — BFS on in-edges.
 
 Spark-first shapes: every search is a frontier-restricted join loop (the
-per-round shuffle is proportional to the wavefront, not the graph);
+per-round shuffle is proportional to the wavefront, not the graph). The
+unweighted searches run no loop of their own: ``bidirectional_bfs``
+advances two ``traversal.bfs_levels`` generators (forward on G, backward
+on Gᵀ) alternately, ``multi_target_bfs`` consumes one until every target
+is levelled, and ``reverse_bfs`` / ``apsp`` call the BFS built on it;
 Floyd-Warshall's O(n³) triple loop is re-expressed as ⌈log₂ n⌉ min-plus
 matrix squarings (each a shuffle join via the GraphBLAS-lite kernels) —
 the associative re-formulation that distributes, versus the inherently
@@ -26,25 +30,14 @@ distributed, and bidirectional halves the number of rounds.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from icebug_spark.operators import algebraic
+from icebug_spark.operators.traversal import bfs_distances, bfs_levels, multi_source_bfs
 from icebug_spark.plans.iterate import checkpoint, checkpoint_observe
-
-
-def _expand_level(
-    frontier: DataFrame, seen: DataFrame, e: DataFrame
-) -> DataFrame:
-    """One BFS level: neighbors of the frontier not yet seen → new
-    (id, dist) rows (min over parallel discoveries)."""
-    return (
-        frontier.join(e, frontier.id == e.src)
-        .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
-        .join(seen.select("id"), "id", "left_anti")
-        .groupBy("id")
-        .agg(F.min("dist").alias("dist"))
-    )
 
 
 def bidirectional_bfs(
@@ -67,54 +60,47 @@ def bidirectional_bfs(
         )
     e = checkpoint(edges.select("src", "dst"))
     er = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-    ds = spark.createDataFrame([(int(source), 0)], "id BIGINT, dist BIGINT")
-    dt = spark.createDataFrame([(int(target), 0)], "id BIGINT, dist BIGINT")
-    fs, ft = ds, dt
-    ls = lt = 0
-    s_alive = t_alive = True
-
+    # one bfs_levels generator per side (forward on G, backward on Gᵀ);
+    # each side's ball is the union of the slices it has yielded, complete
+    # to its radius
+    sides = [
+        bfs_levels(g, spark.createDataFrame([(int(v),)], "id BIGINT"), max_hops)
+        for g, v in ((e, source), (er, target))
+    ]
+    balls = [next(side) for side in sides]
+    radius = [0, 0]
+    alive = [True, True]
+    mu = None
     for _ in range(max_hops):
-        mu = (
-            ds.join(dt.withColumnRenamed("dist", "dt"), "id")
-            .agg(F.min(F.col("dist") + F.col("dt")).alias("mu"))
-            .collect()[0]["mu"]
-        )
-        if mu is not None and mu <= ls + lt:
+        if mu is not None and mu <= radius[0] + radius[1]:
             return spark.createDataFrame(
                 [(source, target, int(mu))],
                 "source BIGINT, target BIGINT, dist BIGINT",
             )
-        if not (s_alive or t_alive):
+        if not any(alive):
             break  # both searches exhausted without bracketing: unreachable
-        expand_s = s_alive and (ls <= lt or not t_alive)
-        # frontier emptiness rides the expansion checkpoint (observed)
-        if expand_s:
-            fs, mf = checkpoint_observe(
-                _expand_level(fs, ds, e), F.count(F.lit(1)).alias("n")
-            )
-            if int(mf["n"] or 0) == 0:
-                s_alive = False
-            else:
-                ds = checkpoint(ds.union(fs))
-                ls += 1
-        else:
-            ft, mf = checkpoint_observe(
-                _expand_level(ft, dt, er), F.count(F.lit(1)).alias("n")
-            )
-            if int(mf["n"] or 0) == 0:
-                t_alive = False
-            else:
-                dt = checkpoint(dt.union(ft))
-                lt += 1
+        i = 0 if alive[0] and (radius[0] <= radius[1] or not alive[1]) else 1
+        piece = next(sides[i], None)
+        if piece is None:
+            alive[i] = False
+            continue
+        radius[i] += 1
+        # a node in both balls is first counted when its later side
+        # settles it, so μ only needs the new slice against the other ball
+        m = (
+            piece.join(balls[1 - i].withColumnRenamed("dist", "d2"), "id")
+            .agg(F.min(F.col("dist") + F.col("d2")).alias("mu"))
+            .collect()[0]["mu"]
+        )
+        if m is not None:
+            mu = m if mu is None else min(mu, m)
+        balls[i] = balls[i].unionByName(piece)
     return spark.createDataFrame([], "source BIGINT, target BIGINT, dist BIGINT")
 
 
 def reverse_bfs(edges: DataFrame, source: int, max_hops: int = 60) -> DataFrame:
     """Hop distances along in-edges (reference ``distance/ReverseBFS.hpp:16``)
     — BFS on the transpose. Returns (id, dist)."""
-    from icebug_spark.operators.traversal import bfs_distances
-
     er = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return bfs_distances(er, source, max_hops)
 
@@ -302,27 +288,26 @@ def multi_target_bfs(
     e = checkpoint(edges.select("src", "dst"))
     tset = {int(t) for t in targets}
     t_df = spark.createDataFrame([(t,) for t in tset], "id BIGINT")
-    seen = spark.createDataFrame([(int(source), 0)], "id BIGINT, dist BIGINT")
-    frontier = seen
-    # two observed metrics replace the two per-level actions of the old
-    # shape (targets-found count, frontier emptiness): the frontier count
-    # rides the expansion checkpoint, the found-target count rides the
-    # seen-union checkpoint
-    found = 1 if int(source) in tset else 0
-    for _ in range(max_hops):
+    seeds = spark.createDataFrame([(int(source),)], "id BIGINT")
+    levels = []
+    found = 0
+    for h, piece in enumerate(bfs_levels(e, seeds, max_hops)):
+        levels.append(piece)
+        # level 0 is the source itself; a deeper slice's targets are read
+        # off its already-materialized checkpoint (a plain scan, no
+        # aggregation exchange: at most len(targets) rows)
+        found += (
+            len(piece.where(F.col("id").isin(list(tset))).select("id").collect())
+            if h
+            else int(source) in tset
+        )
         if found == len(tset):
             break
-        frontier, mf = checkpoint_observe(
-            _expand_level(frontier, seen, e), F.count(F.lit(1)).alias("n")
-        )
-        if int(mf["n"] or 0) == 0:
-            break
-        seen, ms = checkpoint_observe(
-            seen.union(frontier),
-            F.sum(F.col("id").isin(list(tset)).cast("long")).alias("k"),
-        )
-        found = int(ms["k"] or 0)
-    return seen.join(t_df, "id", "leftsemi").select("id", "dist")
+    return (
+        reduce(DataFrame.unionByName, levels)
+        .join(t_df, "id", "leftsemi")
+        .select("id", "dist")
+    )
 
 
 def multi_target_dijkstra(
@@ -441,8 +426,6 @@ def apsp(edges: DataFrame, max_nodes: int = 4000, max_hops: int = 60) -> DataFra
     Size-guarded (O(n²) output). Runs ONE multi-source frontier BFS with
     all nodes as sources — the per-round join carries the source key, so
     it distributes as n concurrent BFS sharing each shuffle."""
-    from icebug_spark.operators.traversal import multi_source_bfs
-
     nodes = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))

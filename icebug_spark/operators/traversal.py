@@ -8,9 +8,26 @@ the bulk-synchronous model), ``distance/MultiTargetBFS.hpp:13``,
 Each round joins the *frontier only* (not the full distance table) against
 edges — frontier-restricted joins keep per-round shuffle proportional to
 the wavefront, the key property for scale-out BFS.
+
+``bfs_levels`` is the package's one frontier-expansion loop; every
+hop-bounded BFS or ball consumes its per-level slices:
+
+- ``multi_source_bfs`` unions them — and through it ``bfs_distances``,
+  ``reachability.reachable_nodes``, ``scd.random_bfs_community``,
+  ``flow.edmonds_karp``'s source set, ``pointtopoint.apsp`` /
+  ``reverse_bfs`` and the sampled-source distance estimators;
+- ``dynamic2.affected_nodes`` unions an unkeyed run seeded from a batch's
+  endpoints (also the invalidation ball of ``dynamic2.dyn_bfs_update``
+  and ``dynamic3.dyn_sssp_update``);
+- ``pointtopoint.multi_target_bfs`` stops consuming once every target is
+  levelled, and ``pointtopoint.bidirectional_bfs`` advances a forward
+  and a backward run alternately.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,32 +48,52 @@ def multi_source_bfs(
 ) -> DataFrame:
     """Hop distances from each source → ``(source, id, dist)``.
 
-    State carries a `frontier` marker; each round expands only frontier
-    rows. The source dimension rides along in the key, so k sources cost
-    one BFS with k× state (reference APSP strategy distributed by source).
+    The source dimension rides along in the key, so k sources cost one
+    BFS with k× state (reference APSP strategy distributed by source).
     """
-    e = edges.select("src", "dst")
-    spark = edges.sparkSession
-    # de-dup up front: the old shape deduped repeated sources in its first
-    # grouped aggregation; the level-0 slice is now emitted directly
-    state = spark.createDataFrame(
+    # de-dup up front: bfs_levels takes distinct seed rows
+    seeds = edges.sparkSession.createDataFrame(
         [(s, s) for s in sorted({int(s) for s in sources})],
         "source BIGINT, id BIGINT",
-    ).withColumn("frontier", F.lit(True))
-    state = checkpoint(state)
+    )
+    return reduce(DataFrame.unionByName, bfs_levels(edges, seeds, max_hops))
+
+
+def bfs_levels(
+    edges: DataFrame, seeds: DataFrame, max_hops: int = 30
+) -> Iterator[DataFrame]:
+    """The frontier-expansion kernel: yields each BFS level's new-settler
+    slice ``(*keys, id, dist)``, level 0 (the seeds) first, until the
+    frontier is empty or ``max_hops`` levels have been expanded.
+
+    ``seeds`` holds DISTINCT ``(*keys, id)`` rows; every column but
+    ``id`` is a key (none, or e.g. ``source``/``seed``), and each key
+    value runs its own BFS inside the same per-level join. Each slice is
+    a zero-shuffle filter of an already-materialized checkpoint; a
+    consumer that needs fewer levels just stops iterating (no further
+    Spark work is submitted), and the full distance table is the union
+    of the slices. Each level is one checkpoint action (its frontier
+    count rides along as an observed metric) plus the frontier broadcast.
+    """
+    keys = [c for c in seeds.columns if c != "id"]
+    e = edges.select("src", "dst")
+    # Exact row counts of the frontier are free: the seed checkpoint and
+    # every level's checkpoint count it as an observed metric, so the
+    # size-adaptive mirror() never needs an extra job.
+    state, m = checkpoint_observe(
+        seeds.select(*keys, "id", F.lit(True).alias("frontier")),
+        F.count(F.lit(1)).alias("nf"),
+    )
+    frontier_rows = int(m["nf"] or 0)
     # The hop distance is NOT loop state: every new node settled at level
     # h has dist == h, a driver-known literal — so the per-level exchange
-    # carries only (source, id, frontier), ~1/3 fewer bytes than the old
-    # (source, id, dist, frontier) rows on the LARGEST shuffles this
-    # engine runs (q161's 0.15·n² settled sweep state). The output is
-    # assembled as a lazy union of the per-level new-settler slices, each
-    # a zero-shuffle filter of an already-materialized checkpoint.
-    levels = [state.select("source", "id", F.lit(0).cast("long").alias("dist"))]
-    # Exact row counts of the frontier / seen tables are free: the
-    # per-round convergence check already counts new frontier rows, so the
-    # size-adaptive mirror() never needs an extra job.
-    frontier_rows = len(sources)
+    # carries only (*keys, id, frontier), ~1/3 fewer bytes than
+    # (*keys, id, dist, frontier) rows on the LARGEST shuffles this
+    # engine runs (q161's 0.15·n² settled sweep state).
+    yield state.select(*keys, "id", F.lit(0).cast("long").alias("dist"))
     for h in range(1, max_hops + 1):
+        if frontier_rows == 0:
+            return
         # The frontier is vertex-bounded while edges are m-sized; without
         # a hint the checkpointed state has no stats, so Catalyst would
         # sort-merge and RESHUFFLE the whole edge table every round.
@@ -66,7 +103,7 @@ def multi_source_bfs(
         nxt = (
             mirror(frontier, frontier_rows).join(e, frontier.id == e.src)
             .select(
-                "source",
+                *keys,
                 F.col("dst").alias("id"),
                 F.lit(False).alias("seen"),
             )
@@ -79,11 +116,11 @@ def multi_source_bfs(
         # beyond the frontier mirror); the seen rows the union adds to the
         # exchange replace the same rows crossing the wire as a broadcast.
         merged = (
-            state.select("source", "id", F.lit(True).alias("seen"))
+            state.select(*keys, "id", F.lit(True).alias("seen"))
             .unionByName(nxt)
-            .groupBy("source", "id")
+            .groupBy(*keys, "id")
             .agg(F.max(F.col("seen")).alias("old"))
-            .select("source", "id", (~F.col("old")).alias("frontier"))
+            .select(*keys, "id", (~F.col("old")).alias("frontier"))
         )
         # the frontier count rides the checkpoint job as an observed
         # metric — one action per level, not checkpoint + count
@@ -92,17 +129,10 @@ def multi_source_bfs(
             F.sum(F.col("frontier").cast("long")).alias("nf"),
         )
         frontier_rows = int(m["nf"] or 0)
-        if frontier_rows == 0:
-            break
-        levels.append(
-            state.where(F.col("frontier")).select(
-                "source", "id", F.lit(h).cast("long").alias("dist")
+        if frontier_rows:
+            yield state.where(F.col("frontier")).select(
+                *keys, "id", F.lit(h).cast("long").alias("dist")
             )
-        )
-    out = levels[0]
-    for piece in levels[1:]:
-        out = out.unionByName(piece)
-    return out
 
 
 def sssp_weighted(
@@ -131,7 +161,7 @@ def sssp_weighted(
                 F.lit(False).alias("seen"),
             )
         )
-        # Same fusion as multi_source_bfs: the state rides the relax
+        # Same fusion as bfs_levels: the state rides the relax
         # shuffle as carrier rows (seen=true) and the per-round full-outer
         # join disappears into the min-aggregation — the carrier's min IS
         # the old distance, the messages' min the best relaxation.

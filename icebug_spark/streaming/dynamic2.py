@@ -16,9 +16,12 @@ scratch — the distributed analog of the reference's per-event updates.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from icebug_spark.operators.traversal import bfs_levels
 from icebug_spark.plans.iterate import checkpoint, checkpoint_observe
 
 
@@ -56,27 +59,23 @@ def affected_nodes(
     """AffectedNodes (``distance/AffectedNodes.hpp:17``): the k-hop
     neighborhood (in the UPDATED graph) of every event endpoint — the node
     set whose results may have changed. → (id)."""
-    eu = checkpoint(_sym(edges_new))
-    frontier = (
+    return _endpoint_ball(checkpoint(_sym(edges_new)), batch, hops)
+
+
+def _endpoint_ball(eu: DataFrame, batch: DataFrame, hops: int) -> DataFrame:
+    """The ``hops``-ball around the batch's event endpoints over the
+    (already symmetric, materialized) arc table ``eu`` → (id): one
+    unkeyed ``bfs_levels`` run seeded from the distinct endpoints."""
+    seeds = (
         batch.select(F.col("u").alias("id"))
         .union(batch.select(F.col("v").alias("id")))
         .where(F.col("id").isNotNull())
         .distinct()
     )
-    seen = frontier
-    for _ in range(hops):
-        # frontier emptiness rides the checkpoint job (observed metric)
-        frontier, m = checkpoint_observe(
-            eu.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(seen, "id", "left_anti"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        if int(m["n"] or 0) == 0:
-            break
-        seen = checkpoint(seen.union(frontier))
-    return seen
+    return reduce(
+        DataFrame.unionByName,
+        (lv.select("id") for lv in bfs_levels(eu, seeds, hops)),
+    )
 
 
 def dyn_bfs_update(
@@ -97,7 +96,7 @@ def dyn_bfs_update(
         # invalidate the affected region, keep the rest as seeds; the
         # SOURCE (dist == 0) is never invalidated — it anchors the
         # re-relaxation even when the cone covers the whole graph
-        aff = affected_nodes(edges_new, batch, hops=max_rounds)
+        aff = _endpoint_ball(eu, batch, max_rounds)
         dist = dist.join(aff, "id", "left_anti").unionByName(
             dist.where(F.col("dist") == 0)
         ).distinct()

@@ -336,7 +336,7 @@ def dyn_sssp_update(
     the CURRENT labels (settled nodes relax once, improvements cascade
     only through the affected cone). Removals invalidate the affected
     region first (per-event affected set, like the reference)."""
-    from icebug_spark.streaming.dynamic2 import affected_nodes
+    from icebug_spark.streaming.dynamic2 import _endpoint_ball
 
     e = edges_weighted_new
     if "weight" not in e.columns:
@@ -346,7 +346,9 @@ def dyn_sssp_update(
     ))
     has_removal = batch.where(F.col("type") == "EDGE_REMOVAL").limit(1).count() > 0
     if has_removal:
-        aff = affected_nodes(edges_weighted_new.select("src", "dst"), batch, hops=max_rounds)
+        # ew already holds both arc directions: the invalidation ball runs
+        # on it instead of re-materializing a symmetrized copy
+        aff = _endpoint_ball(ew, batch, max_rounds)
         # the SOURCE (dist == 0) is never invalidated — it anchors the
         # re-relaxation even when the affected cone covers the whole graph
         dist = dist.join(aff, "id", "left_anti").unionByName(
